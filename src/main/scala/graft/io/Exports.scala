@@ -113,9 +113,6 @@ object Exports {
       lit("Unknown").as("source_sentence"),
       lit(true).as("extractable"))
 
-  def triplesCsv(triples: Dataset[Triple]): DataFrame =
-    triplesCsvWithDoc(triples).drop("docId")
-
   /** One evaluation-result row, the J3 join's build side
     * (batch_pipeline.py:489-499): `idx` is the row's position in the doc's
     * evaluation list (first match wins), `extractable` is the doc-level

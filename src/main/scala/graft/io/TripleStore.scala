@@ -1,31 +1,33 @@
 package graft.io
 
+import java.io.IOException
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{PageRow, Triple}
 import graft.pipeline.Pipeline
+import graft.util.ParquetMeta
 
 /** Iceberg-style materialization of the triples table (no Iceberg jars ship
-  * in this environment, so the same contract is built on parquet):
+  * in this environment, so the same contract is built on parquet). All
+  * store IO goes through the Hadoop `FileSystem` of the store path, so a
+  * plain path and a `file://`, `hdfs://` or `s3a://` URI behave alike.
   *
-  *  - **bucketing on subject hash**: output partitioned by
-  *    `bucket = pmod(xxhash64(subj), N)`, rows sorted by subj within
-  *    partitions — downstream subject joins/aggregations prune by bucket
-  *    and co-locate equal subjects (north_star: "explicit bucketing on
-  *    subject-hash").
+  *  - **layout**: `runCheckpointed`/`upsertDocs` partition `outDir/data` by
+  *    `unit = pmod(xxhash64(docId), units)` (docId is the page url; a
+  *    recrawl rewrites only its unit); `write` (the canonicalized store)
+  *    buckets by `pmod(xxhash64(subj), N)` so subject joins prune by
+  *    bucket. Rows are sorted by subj within partitions.
   *  - **per-partition lineage + metrics checkpoints enabling exact resume**:
-  *    work is split into `unit = pmod(xxhash64(url), units)` slices; each
-  *    completed unit gets a lineage record (doc/triple counts) written
-  *    *after* its data commit. Resume filters pages to units without
-  *    lineage and rewrites only those partitions (dynamic partition
-  *    overwrite → idempotent). A kill between data and lineage writes
-  *    re-processes that unit; the final triple set is identical.
+  *    each completed unit gets a lineage record (doc/triple counts) under
+  *    `outDir/lineage`, written *after* its data commit. Resume filters
+  *    pages to units without lineage and rewrites only those partitions
+  *    (dynamic partition overwrite → idempotent). A kill between data and
+  *    lineage writes re-processes that unit; the final triple set is
+  *    identical.
   */
 object TripleStore {
 
@@ -46,6 +48,24 @@ object TripleStore {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
+  private def fsOf(spark: SparkSession, outDir: String): FileSystem =
+    new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def dataDir(outDir: String) = s"$outDir/data"
+  private def lineageDir(outDir: String) = new Path(outDir, "lineage")
+
+  private def readString(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
+  private def writeString(fs: FileSystem, p: Path, s: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(s.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
   /** Iceberg-MERGE-style copy-on-write upsert: replace ALL existing
     * triples of the given documents with `newTriples`, rewriting only the
     * unit partitions those documents hash into. Two-hop commit (staging
@@ -63,18 +83,17 @@ object TripleStore {
     val withUnit = newTriples.toDF().withColumn("unit", bucketOf(col("docId"), units))
     val affected = withUnit.select("unit").distinct().as[Int].collect().toSeq.sorted
     if (affected.isEmpty) return Seq.empty
+    val fs = fsOf(spark, outDir)
     val main = dataDir(outDir)
     val staging = s"$outDir/_staging"
     // staging is per-batch scratch: clear it first, so unit partitions from
     // EARLIER batches can't leak into this batch's second hop (they would
     // both grow each write toward a full-store rewrite and silently revert
     // units another writer touched in between)
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    val fs = stagingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(stagingPath)) fs.delete(stagingPath, true)
+    fs.delete(new Path(staging), true)
     val docs = newTriples.toDF().select("docId").distinct()
     val combined =
-      if (Files.exists(Paths.get(main)))
+      if (fs.exists(new Path(main)))
         spark.read.parquet(main)
           .filter(col("unit").isin(affected: _*))
           .join(broadcast(docs), Seq("docId"), "left_anti")
@@ -100,32 +119,22 @@ object TripleStore {
   // Checkpointed (exact-resume) run
   // ------------------------------------------------------------------
 
-  private def lineageDir(outDir: String) = Paths.get(outDir, "lineage")
-  private def dataDir(outDir: String) = s"$outDir/data"
+  def completedUnits(outDir: String): Set[Int] = lineage(outDir).map(_.unit).toSet
 
-  def completedUnits(outDir: String): Set[Int] = {
-    val dir = lineageDir(outDir)
-    if (!Files.exists(dir)) Set.empty
-    else
-      Files.list(dir).iterator.asScala
-        .filter(_.getFileName.toString.endsWith(".tsv"))
-        .flatMap(p => Files.readAllLines(p, StandardCharsets.UTF_8).asScala)
-        .flatMap(_.split("\t").headOption)
-        .map(_.toInt)
-        .toSet
-  }
-
+  /** Every committed unit's lineage record, read through the store's
+    * filesystem (Hadoop conf of the active session). Only `*.tsv` attempt
+    * files count: an attempt being written still has its temp name.
+    */
   def lineage(outDir: String): Vector[UnitLineage] = {
+    val fs = fsOf(SparkSession.active, outDir)
     val dir = lineageDir(outDir)
-    if (!Files.exists(dir)) Vector.empty
+    if (!fs.exists(dir)) Vector.empty
     else
-      Files.list(dir).iterator.asScala
-        .filter(_.getFileName.toString.endsWith(".tsv"))
-        .flatMap(p => Files.readAllLines(p, StandardCharsets.UTF_8).asScala)
-        .map { l =>
-          val a = l.split("\t"); UnitLineage(a(0).toInt, a(1).toLong, a(2).toLong)
-        }
-        .toVector
+      fs.listStatus(dir).toVector
+        .filter(_.getPath.getName.endsWith(".tsv"))
+        .flatMap(st => readString(fs, st.getPath).split("\n").filter(_.nonEmpty))
+        .map(_.split("\t"))
+        .map(a => UnitLineage(a(0).toInt, a(1).toLong, a(2).toLong))
         .sortBy(_.unit)
   }
 
@@ -140,64 +149,54 @@ object TripleStore {
       cfg: Pipeline.Config = Pipeline.Config()): Vector[UnitLineage] = {
     val spark = pages.sparkSession
     import spark.implicits._
+    val fs = fsOf(spark, outDir)
 
     // resume is only valid against the same unit partitioning
-    val unitsFile = Paths.get(outDir, "lineage", "_units")
-    if (Files.exists(unitsFile)) {
-      val prev = new String(Files.readAllBytes(unitsFile), StandardCharsets.UTF_8).trim.toInt
+    val unitsFile = new Path(lineageDir(outDir), "_units")
+    if (fs.exists(unitsFile)) {
+      val prev = readString(fs, unitsFile).trim.toInt
       require(prev == units,
         s"store at $outDir was built with --units $prev; resume must use the same value")
     }
 
     val done = completedUnits(outDir)
-    val withUnit = pages.withColumn("unit", bucketOf(col("url"), units))
     val pending =
-      if (done.isEmpty) withUnit
-      else withUnit.filter(!col("unit").isin(done.toSeq: _*))
+      if (done.isEmpty) pages
+      else pages.filter(!bucketOf(col("url"), units).isin(done.toSeq: _*))
 
-    val docCounts = pending.groupBy(col("unit"))
-      .agg(count(lit(1)).as("docs")).as[(Int, Long)].collect().toMap
+    val docCounts = pending.groupBy(bucketOf(col("url"), units))
+      .agg(count(lit(1))).as[(Int, Long)].collect().toMap
     if (docCounts.isEmpty) return Vector.empty
 
-    val triples = pending
-      .select("url", "warc_ts", "html", "text", "lang", "unit")
-      .as[(String, java.sql.Timestamp, Array[Byte], String, String, Int)]
-      .mapPartitions { it =>
-        val c = cfg.copy(dict = cfg.dictionary)
-        it.flatMap { case (url, ts, html, text, lang, unit) =>
-          Pipeline.convertPage(PageRow(url, ts, html, text, lang), c)
-            .map(t => (unit, t))
-        }
-      }.toDF("unit", "t").select(col("unit"), col("t.*"))
-
-    triples
+    // docId is the page url, so triples land in their page's unit
+    Pipeline.triples(pending, cfg)
+      .withColumn("unit", bucketOf(col("docId"), units))
       .repartition(col("unit"))
       .sortWithinPartitions("subj", "pred", "obj")
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("unit").parquet(dataDir(outDir))
 
-    // metrics from what was actually committed, then lineage (commit point)
-    val pendingUnits = docCounts.keySet
-    val tripleCounts = spark.read.parquet(dataDir(outDir))
-      .filter(col("unit").isin(pendingUnits.toSeq: _*))
-      .groupBy("unit").agg(count(lit(1)).as("triples"))
-      .as[(Int, Long)].collect().toMap
+    // metrics from what was actually committed (parquet footers, no job);
+    // a unit whose pages yield no triples writes no partition
+    val results = docCounts.keys.toVector.sorted.map { u =>
+      val part = new Path(dataDir(outDir), s"unit=$u")
+      val triples = if (fs.exists(part)) ParquetMeta.rowCount(spark, part.toString) else 0L
+      UnitLineage(u, docCounts(u), triples)
+    }
 
-    val results = pendingUnits.toVector.sorted.map { u =>
-      UnitLineage(u, docCounts.getOrElse(u, 0L), tripleCounts.getOrElse(u, 0L))
-    }
-    if (results.nonEmpty) {
-      Files.createDirectories(lineageDir(outDir))
-      if (!Files.exists(unitsFile))
-        Files.write(unitsFile, units.toString.getBytes(StandardCharsets.UTF_8))
-      val attempt = Files.list(lineageDir(outDir)).iterator.asScala
-        .count(_.getFileName.toString.endsWith(".tsv"))
-      val body = results.map(r => s"${r.unit}\t${r.docs}\t${r.triples}").mkString("\n")
-      Files.write(
-        lineageDir(outDir).resolve(f"attempt-$attempt%04d.tsv"),
-        body.getBytes(StandardCharsets.UTF_8))
-    }
+    // lineage is the commit point: write the attempt under a temp name, then
+    // rename it into place, so a reader never sees a partial attempt
+    val dir = lineageDir(outDir)
+    fs.mkdirs(dir)
+    if (!fs.exists(unitsFile)) writeString(fs, unitsFile, units.toString)
+    val attempt = fs.listStatus(dir).count(_.getPath.getName.endsWith(".tsv"))
+    val target = new Path(dir, f"attempt-$attempt%04d.tsv")
+    val tmp = new Path(dir, s"${target.getName}.tmp")
+    writeString(fs, tmp, results.map(r => s"${r.unit}\t${r.docs}\t${r.triples}").mkString("\n"))
+    // a local rename replaces an existing target, so check first
+    if (fs.exists(target) || !fs.rename(tmp, target))
+      throw new IOException(s"cannot commit lineage $target: it exists or the rename failed")
     results
   }
 }

@@ -2,7 +2,7 @@ package graft.multimodal
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 
 /** Multimodal (image/audio/video) columns as opaque `binary` + typed
   * metadata, per the training-data-pipeline requirements.
@@ -535,17 +535,5 @@ object BinaryFeatures {
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions(_.map { case (id, bytes) => decode(id, bytes) })
-  }
-
-  /** Frame-sampling stub: every k-th "frame" index of a video payload —
-    * exercises the one→many explode shape real frame extraction has.
-    */
-  def sampleFrames(media: Dataset[(Long, Array[Byte])], everyK: Int = 2): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.flatMap { case (id, bytes) =>
-      val f = decodeStub(id, bytes)
-      (0 until f.n_frames by math.max(1, everyK)).map(fi => (id, fi, f.byte_len))
-    }.toDF("doc_id", "frame_idx", "byte_len")
   }
 }

@@ -21,7 +21,7 @@ import graft.rdf.TripleEmitter
   * cluster scale this is embarrassingly parallel: no groupBy, no join — the
   * alias dictionary and frame lexicon ship on the classpath (equivalent to
   * broadcast; loaded once per executor JVM). The only shuffles in the full
-  * job are the ones we *choose* downstream: bucket-by-subject at write time
+  * job are the ones we *choose* downstream: partitioning at write time
   * (TripleStore) and canonicalization/stats aggregations.
   */
 object Pipeline {

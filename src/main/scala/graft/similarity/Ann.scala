@@ -540,12 +540,6 @@ object Ann {
       .toDF("qid", "nid", "sim")
   }
 
-  def boundedPairSimsI8(
-      members: Dataset[(Long, Long, Double, Array[Byte])],
-      probes: Dataset[(Long, Long, Double, Array[Byte])],
-      cap: Int): DataFrame =
-    boundedPairSimsRawI8(members, probes, cap).dropDuplicates("qid", "nid")
-
   /** [[lshTopK]] over the quantized store: same bucket/shard topology,
     * signatures from codes, rerank via the integer kernel.
     */

@@ -31,6 +31,11 @@ private[streaming] object StreamRun {
 
   /** Run `body` (which starts and awaits a stream on `spark`) with no-data
     * micro-batches disabled, restoring the previous setting after.
+    *
+    * Contract: at most one drain per session at a time. The setting is
+    * session-global and not guarded: overlapping drains on one session can
+    * restore each other's override (leaving no-data batches disabled), and
+    * any other stream started on the session during the scope inherits it.
     */
   def withoutNoDataBatches[T](spark: SparkSession)(body: => T): T = {
     val prev = spark.conf.getOption(Key)

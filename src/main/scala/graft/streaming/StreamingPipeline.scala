@@ -96,8 +96,10 @@ object StreamingPipeline {
     * (TripleStore.upsertDocs copy-on-write on the affected unit
     * partitions), new documents append. AvailableNow trigger: each call
     * drains what is new since the last checkpoint and terminates, the
-    * incremental-backfill pattern; swap the trigger for a continuous
-    * deployment.
+    * incremental-backfill pattern. A continuous deployment must swap the
+    * trigger AND drop the `StreamRun.withoutNoDataBatches` wrapper: without
+    * no-data batches, event-time timeouts never fire while idle, so per-url
+    * state is not evicted until the next data batch.
     */
   def streamToStore(
       spark: SparkSession,

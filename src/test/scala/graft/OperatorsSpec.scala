@@ -155,6 +155,27 @@ class OperatorsSpec extends AnyFunSuite {
       == overwriteModeBefore)
   }
 
+  // a URI-form store path must still see the existing store: otherwise the
+  // unit is overwritten with just the new batch and earlier docs are lost
+  test("upsertDocs on a file:// store keeps earlier docs of the same unit") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.io.TripleStore
+    val store = "file://" + java.nio.file.Files.createTempDirectory("upsert_uri")
+    val hashed = (1 to 50).map(i => s"doc$i").toDF("id")
+      .select(col("id"), TripleStore.bucketOf(col("id"), 4))
+      .as[(String, Int)].collect().toVector
+    val (dA, u) = hashed.head
+    val dB = hashed.tail.collectFirst { case (d, `u`) => d }.get
+    def one(d: String, v: String) =
+      Seq(Triple(d, "http://x/A", true, "F", "R", "has_theme", v, false)).toDS()
+    assert(TripleStore.upsertDocs(one(dA, "a1"), store, units = 4) == Seq(u))
+    assert(TripleStore.upsertDocs(one(dB, "b1"), store, units = 4) == Seq(u))
+    val docs = spark.read.parquet(s"$store/data")
+      .select("docId").distinct().as[String].collect().toSet
+    assert(docs == Set(dA, dB))
+  }
+
   test("salted aggregation equals direct aggregation") {
     import spark.implicits._
     val df = Seq.tabulate(1000)(i => (i % 7, i.toDouble)).toDF("k", "v")

@@ -1,10 +1,11 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
+import scala.io.Source
 
+import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.extract.HtmlText
@@ -68,9 +69,13 @@ class PipelineSpec extends AnyFunSuite {
     assert(conflicting == 0)
   }
 
-  test("checkpointed run resumes exactly after losing a unit") {
+  /** Build into `dir`, lose one unit (its data partition and lineage
+    * line), resume, and compare. The lineage edit goes through the store's
+    * Hadoop filesystem, as the store's own IO does: Hadoop's local
+    * filesystem keeps `.crc` side files that a java.nio edit leaves stale.
+    */
+  private def resumesAfterLosingAUnit(dir: String): Unit = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("triples_ckpt").toString
     val pages = SynthCorpus.pages(spark, 40, seed = 11L)
 
     val first = TripleStore.runCheckpointed(pages, dir, units = 8)
@@ -81,14 +86,20 @@ class PipelineSpec extends AnyFunSuite {
 
     // simulate a lost unit: drop its data partition and lineage line
     val victim = first.head.unit
-    val unitDir = Paths.get(dir, "data", s"unit=$victim")
-    Files.walk(unitDir).iterator.asScala.toVector.reverse.foreach(Files.delete(_))
-    val lineageFiles = Files.list(Paths.get(dir, "lineage")).iterator.asScala.toVector
-    lineageFiles.foreach { f =>
-      val kept = Files.readAllLines(f, StandardCharsets.UTF_8).asScala
-        .filterNot(_.startsWith(s"$victim\t"))
-      Files.write(f, kept.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    }
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new Path(s"$dir/data/unit=$victim"), true))
+    fs.listStatus(new Path(s"$dir/lineage")).map(_.getPath)
+      .filter(_.getName.endsWith(".tsv"))
+      .foreach { f =>
+        val in = fs.open(f)
+        val kept =
+          try Source.fromInputStream(in, "UTF-8").getLines()
+            .filterNot(_.startsWith(s"$victim\t")).toVector
+          finally in.close()
+        val out = fs.create(f, true)
+        try out.write(kept.mkString("\n").getBytes(StandardCharsets.UTF_8))
+        finally out.close()
+      }
 
     val second = TripleStore.runCheckpointed(pages, dir, units = 8)
     assert(second.map(_.unit) == Vector(victim), s"resumed units: $second")
@@ -99,5 +110,14 @@ class PipelineSpec extends AnyFunSuite {
 
     // third run: nothing pending
     assert(TripleStore.runCheckpointed(pages, dir, units = 8).isEmpty)
+  }
+
+  test("checkpointed run resumes exactly after losing a unit") {
+    resumesAfterLosingAUnit(Files.createTempDirectory("triples_ckpt").toString)
+  }
+
+  // a URI-form store path must keep data and lineage together under it
+  test("checkpointed run resumes exactly after losing a unit (file:// store)") {
+    resumesAfterLosingAUnit("file://" + Files.createTempDirectory("triples_ckpt_uri"))
   }
 }
