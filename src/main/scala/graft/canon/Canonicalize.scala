@@ -139,9 +139,10 @@ object Canonicalize {
   /** DEFLATE-compressed bytes per node name over a bounded driver-side
     * sample — the shuffle-cost proxy the encode decision needs. Shuffle
     * blocks are lz4-compressed, so RAW name length overstates the
-    * string path's cost on repetitive names: CcScaleBench measured the
-    * encode path at 3.32× shuffle / −12% wall on high-entropy ~70 B
-    * URIs but BREAK-EVEN-to-slower (+10% wall) on compressible padded /
+    * string path's cost on repetitive names: BENCH.md "CC
+    * dictionary-encode path at data scale" measured the encode path at
+    * 3.32× shuffle / −12% wall on high-entropy ~70 B URIs but
+    * BREAK-EVEN-to-slower (+10% wall) on compressible padded /
     * sequential names whose shuffled bytes deflate to almost nothing.
     * The per-round cost the decision models is the LABEL table's — one
     * row per distinct NODE — so the probe dedups its sample before
@@ -179,10 +180,11 @@ object Canonicalize {
     *   shuffle bytes several-fold. The count is taken on the
     *   checkpointed edge list — a metadata-cheap job, not a recompute.
     * @param encodeMinBytesPerName entropy gate (round-5, from the
-    *   CcScaleBench both-directions finding): even above the edge
-    *   threshold, encode only when the sampled COMPRESSED name size
-    *   exceeds this — names that deflate below ~2× the 8-byte id cost
-    *   the string path less than the encode machinery's fixed stages.
+    *   both-directions finding in BENCH.md "CC dictionary-encode path
+    *   at data scale"): even above the edge threshold, encode only
+    *   when the sampled COMPRESSED name size exceeds this — names that
+    *   deflate below ~2× the 8-byte id cost the string path less than
+    *   the encode machinery's fixed stages.
     *   0.0 forces the encode path regardless of entropy (benches/specs).
     * @param localMaxEdges graphs whose bidirected edge list fits under
     *   this bound are solved by a DRIVER-LOCAL union-find instead of

@@ -85,7 +85,7 @@ object TripleStore {
     if (affected.isEmpty) return Seq.empty
     val fs = fsOf(spark, outDir)
     val main = dataDir(outDir)
-    val staging = s"$outDir/_staging"
+    val staging = s"$outDir/staging"
     // staging is per-batch scratch: clear it first, so unit partitions from
     // EARLIER batches can't leak into this batch's second hop (they would
     // both grow each write toward a full-store rewrite and silently revert

@@ -460,7 +460,7 @@ object Ann {
   // accumulates integer products, with ONE float multiply (scale_a ·
   // scale_b · acc) per pair instead of one per component. Neighbor
   // overlap vs the float path is spec-gated ≥ 0.9 (StreamingAnnSpec);
-  // the A/B timing lives in tools/I8AnnBench.
+  // the 64- vs 768-dim A/B timings are in BENCH.md "Round 5" (int8 ANN).
 
   /** Integer dot over int8 codes — the bandwidth-bound kernel. Exact in
     * Long (|codes| · 127² ≪ 2⁶³).

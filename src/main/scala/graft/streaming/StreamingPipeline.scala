@@ -82,7 +82,10 @@ object StreamingPipeline {
             else {
               val winner = fresh.maxBy(_.warc_ts.getTime)
               state.update(winner.warc_ts.getTime)
-              state.setTimeoutTimestamp(winner.warc_ts.getTime, watermark)
+              // a backfilled page can sit far below the watermark; a
+              // timeout under the watermark aborts the query
+              state.setTimeoutTimestamp(
+                math.max(winner.warc_ts.getTime, state.getCurrentWatermarkMs()), watermark)
               Iterator.single(winner)
             }
           }

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Optimization-round instrumentation (guide §1): per-query isolation with
@@ -16,7 +14,8 @@ import graft.SparkEntry
   * evidence the round's writeup points at.
   *
   * Usage: runMain graft.tools.BenchExtra <label> [query names...]
-  *   SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench;
+  *   SPARK_GRAFT_SF_DIR as in Bench; SPARK_GRAFT_CPUS, SPARK_MASTER and
+  *   SPARK_GRAFT_EVENTLOG as in `Session`;
   *   SPARK_GRAFT_PLANS_DIR overrides the plans output dir (default
   *   plans/r06). With no query names, runs every declared query.
   */
@@ -26,25 +25,10 @@ object BenchExtra {
     val label = args.headOption.getOrElse("before")
     val wanted = args.drop(1).toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val plansDir = new File(sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r06"))
     plansDir.mkdirs()
 
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // optional per-stage attribution (guide §7.1 without a live UI): write
-    // the event log and mine job/stage durations offline
-    sys.env.get("SPARK_GRAFT_EVENTLOG").foreach { dir =>
-      new File(dir).mkdirs()
-      builder.config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", dir)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-bench-extra", Session.defaultCores)
 
     // same bench-mode contract as graft.Bench: fixture-writing queries
     // return their bare plan, so the timing measures the operator

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 
 import graft.io.TripleStore
 import graft.model.PageRow
@@ -22,17 +22,9 @@ object BuildKg {
     val input = opts.getOrElse("--input", "synth:1000")
     val out = opts.getOrElse("--out", sys.error("--out required"))
     val units = opts.getOrElse("--units", "16").toInt
-    val cores = opts.getOrElse("--cores", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val cores = opts.get("--cores").fold(Session.defaultCores)(_.toInt)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cores]"))
-      .appName("graft-build-kg")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-build-kg", cores)
     import spark.implicits._
 
     val pages: Dataset[PageRow] =
@@ -41,7 +33,7 @@ object BuildKg {
         val n = parts(0).toLong
         val skew = if (parts.length > 1) parts(1).toDouble else 0.0
         SynthCorpus.pages(spark, n, seed = 42L, skewFraction = skew,
-          partitions = cores.toInt * 4)
+          partitions = cores * 4)
       } else spark.read.parquet(input).as[PageRow]
 
     val t0 = System.nanoTime()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 
 import graft.io.{Exports, TripleStore}
 import graft.model.Triple
@@ -23,16 +23,9 @@ object ExportKg {
     val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
     val store = opts.getOrElse("--store", sys.error("--store required"))
     val out = opts.getOrElse("--out", sys.error("--out required"))
-    val cores = opts.getOrElse("--cores", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val cores = opts.get("--cores").fold(Session.defaultCores)(_.toInt)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cores]"))
-      .appName("graft-export-kg")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-export-kg", cores)
     import spark.implicits._
 
     val triples = spark.read.parquet(s"$store/data")

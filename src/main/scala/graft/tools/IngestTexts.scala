@@ -41,15 +41,9 @@ object IngestTexts {
     val in = opts.getOrElse("--in", sys.error("--in required"))
     val out = opts.getOrElse("--out", sys.error("--out required"))
     val limit = opts.getOrElse("--limit", "0").toInt
-    val cores = opts.getOrElse("--cores", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val cores = opts.get("--cores").fold(Session.defaultCores)(_.toInt)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cores]"))
-      .appName("graft-ingest-texts")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-ingest-texts", cores)
 
     val pages = ingest(spark, in, limit)
     pages.write.mode(SaveMode.Overwrite).parquet(out)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic N×-scaled copy of a driver testdata dir (sf0.1 → "sf1"),
@@ -24,14 +24,7 @@ object MakeScale {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-make-scale", Session.defaultCores)
 
     val keyCols = Map(
       "customer" -> Seq("c_custkey"),

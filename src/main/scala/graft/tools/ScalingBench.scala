@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.{Pipeline, SynthCorpus}
 
 /** Scaling-efficiency evidence for the north rule (N vs 4N executors).
@@ -14,18 +12,12 @@ import graft.pipeline.{Pipeline, SynthCorpus}
   * expected scaling limit is CPU saturation, not shuffle or skew.
   *
   * Usage: runMain graft.tools.ScalingBench [nDocs] — prints one JSON line.
+  * Leave `SPARK_MASTER` unset: `Session` would use it for both levels.
   */
 object ScalingBench {
 
   private def measure(cores: Int, nDocs: Long, skew: Double): (Long, Double) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(s"graft-scaling-$cores", cores)
     // text column blanked → the full path runs, including html→text
     // extraction (the real per-row work on a Common-Crawl-style table)
     def pages(n: Long) =

@@ -143,7 +143,7 @@ class OperatorsSpec extends AnyFunSuite {
     // the round-2 bug: staging accumulated unit partitions across batches,
     // so batch 2's second hop rewrote (and could silently revert) batch
     // 1's units. Staging must now hold ONLY batch 2's unit.
-    val stagingUnits = spark.read.parquet(s"$store/_staging")
+    val stagingUnits = spark.read.parquet(s"$store/staging")
       .select("unit").distinct().as[Int].collect().toSet
     assert(stagingUnits == u2.toSet, s"staging leaked units: $stagingUnits vs $u2")
     // both docs present in main

@@ -87,6 +87,22 @@ class StreamingAnnSpec extends AnyFunSuite {
     // recrawled docs were REPLACED (old-only triples gone), new docs added
     assert(after2 == expect2)
     assert(after2 != after1)
+
+    // batch 3: a backfill of 5 never-seen urls stamped 12 h after b1, so
+    // 12 h below b2's crawl. Rows under the previous batch's watermark
+    // (b1's) are dropped as late; these pass that filter but sit below the
+    // watermark b2 advanced, and the drain must not set an event-time
+    // timeout under it (it aborted)
+    val b3 = (15L until 20L).map(i => SynthCorpus.row(33L, i, 0.0)).map(p =>
+      p.copy(warc_ts = new java.sql.Timestamp(p.warc_ts.getTime + 43200000L))).toDS()
+    b3.write.mode("overwrite").parquet(s"$dir/b3")
+    StreamingPipeline.streamToStore(spark, s"$dir/b*", store, units = 4)
+    val after3 = spark.read.parquet(s"$store/data")
+      .select("docId", "subj", "frame", "pred", "obj")
+      .as[(String, String, String, String, String)].collect().toSet
+    val expect3 = Pipeline.triples(b2.union(b3))
+      .map(t => (t.docId, t.subj, t.frame, t.pred, t.obj)).collect().toSet
+    assert(after3 == expect3)
   }
 
   /** Deterministic clustered unit vectors — the realistic embedding shape
